@@ -335,6 +335,33 @@ def from_string(s: str) -> int:
     return ans | len(s)
 
 
+def assignment_bbox(qt) -> tuple[np.ndarray, ...]:
+    """Cells -> fixed-point bboxes (minlon,minlat,maxlon,maxlat) holding
+    every box that `calculate` assigns to the cell or to a descendant.
+
+    `calculate` lets a box reach QT_BUFFER cell widths past each edge in
+    (lon/180, Mercator y) space, so the buffer is applied there before
+    un-projecting (`as_bbox` buffers in degrees, which falls short on the
+    equator side of a cell).  A buffered edge at or past the Mercator edge
+    reaches the pole: the root holds boxes beyond +-85 deg.  Rounded
+    outward to whole fixed-point units."""
+    x, y, z = to_xyz(np.atleast_1d(np.asarray(qt, dtype=np.int64)))
+    w = 2.0 / (2.0 ** z)  # cell side in normalized units (the planet is 2)
+    pad = w * QT_BUFFER
+    minx = -1.0 + x * w - pad
+    maxx = -1.0 + (x + 1) * w + pad
+    miny = 1.0 - (y + 1) * w - pad
+    maxy = 1.0 - y * w + pad
+    minlat = np.where(miny <= -1.0, -90.0, latitude_un_mercator(miny, 1.0))
+    maxlat = np.where(maxy >= 1.0, 90.0, latitude_un_mercator(maxy, 1.0))
+    return (
+        np.floor(minx * 180.0 * 1e7).astype(np.int64),
+        np.floor(minlat * 1e7).astype(np.int64),
+        np.ceil(maxx * 180.0 * 1e7).astype(np.int64),
+        np.ceil(maxlat * 1e7).astype(np.int64),
+    )
+
+
 def as_bbox(qt, buffer: float = 0.0) -> tuple[np.ndarray, ...]:
     """Cell -> buffered fixed-point bbox (minlon,minlat,maxlon,maxlat)
     (quadtree.rs:498-541)."""

@@ -18,6 +18,12 @@ bbox->cell encode crosses into an Arrow-batched pandas UDF.  The rel->rel
 fixed point runs on the driver: rel->rel edges are metadata-scale (a few
 thousand at planet scale) and the reference's in-pass update order cannot
 be reproduced by bulk-synchronous joins.
+
+This module is also the one home of the OSM element-graph encoding that
+the extract closure (operators.filter.id_closure) and the incremental
+update (streaming.updates) share: the way->node and relation->member
+edge lists, the semi-joins over them, and the REL_PASSES-bounded rel->rel
+ancestor closure.
 """
 
 from __future__ import annotations
@@ -28,6 +34,10 @@ from pyspark.sql import functions as F
 from ..functions import qt_numpy as qtn
 from ..functions import qt_spark as qs
 
+# rel->rel passes of both the reference closure (filter_elements.rs:366-370,
+# find_update.rs) and the qt propagation (calculate.rs:820-855)
+REL_PASSES = 5
+
 
 def way_node_edges(ways: DataFrame) -> DataFrame:
     """Invert ways: (way_id, node_id) pairs (PackWayNodes analog,
@@ -36,6 +46,59 @@ def way_node_edges(ways: DataFrame) -> DataFrame:
     return ways.select(
         F.col("id").alias("way_id"), F.explode("refs").alias("node_id")
     )
+
+
+def relation_members(relations: DataFrame) -> DataFrame:
+    """(rel_id, mem_type, mem_ref) per member; 0=node 1=way 2=relation.
+    Relations without members yield no rows."""
+    return relations.select(
+        F.col("id").alias("rel_id"), F.explode("members").alias("m")
+    ).select("rel_id", F.col("m.mem_type").alias("mem_type"), F.col("m.mem_ref").alias("mem_ref"))
+
+
+def ways_touching(ways: DataFrame, node_ids: DataFrame) -> DataFrame:
+    """(id) of the ways referencing any node in `node_ids` (id)."""
+    return (
+        way_node_edges(ways)
+        .join(node_ids.select(F.col("id").alias("node_id")), "node_id", "left_semi")
+        .select(F.col("way_id").alias("id"))
+        .distinct()
+    )
+
+
+def nodes_of_ways(ways: DataFrame, way_ids: DataFrame) -> DataFrame:
+    """(id) of every node referenced by a way in `way_ids` (id)."""
+    return (
+        way_node_edges(ways)
+        .join(way_ids.select(F.col("id").alias("way_id")), "way_id", "left_semi")
+        .select(F.col("node_id").alias("id"))
+        .distinct()
+    )
+
+
+def rels_with_members(relations: DataFrame, ids: DataFrame, mem_type: int) -> DataFrame:
+    """(id) of the relations with a member of type `mem_type` in `ids` (id)."""
+    return (
+        relation_members(relations)
+        .filter(F.col("mem_type") == mem_type)
+        .join(ids.select(F.col("id").alias("mem_ref")), "mem_ref", "left_semi")
+        .select(F.col("rel_id").alias("id"))
+        .distinct()
+    )
+
+
+def rel_ancestors(relations: DataFrame, seed: DataFrame) -> DataFrame:
+    """(id) of `seed` plus every relation reaching a seed relation in at
+    most REL_PASSES rel->rel member hops.
+
+    Each pass is seed ∪ parents(previous pass), never x ∪ parents(x):
+    the latter references x twice, so the plan doubles every pass, while
+    this form grows by one semi-join per pass.  Both give the same set
+    because parents() distributes over union."""
+    rels = seed
+    for _ in range(REL_PASSES):
+        rels = seed.unionByName(rels_with_members(relations, rels, 2)).distinct()
+    return rels
 
 
 def way_qts(
@@ -102,12 +165,7 @@ def rel_qts(
     over the (metadata-scale) rel->rel edge list, in ascending rel-id order.
     """
     spark = spark or relations.sparkSession
-    mems = relations.select(
-        F.col("id").alias("rel_id"),
-        F.explode_outer("members").alias("m"),
-    ).select(
-        "rel_id", F.col("m.mem_type").alias("mem_type"), F.col("m.mem_ref").alias("mem_ref")
-    )
+    mems = relation_members(relations)
 
     node_side = (
         mems.filter(F.col("mem_type") == 0)
@@ -156,14 +214,14 @@ def rel_qts(
             .toPandas()
         )
         state = {int(k): int(v) for k, v in zip(pdf["rel_id"], pdf["qt"])}
-        for it in range(5):
+        for it in range(REL_PASSES):
             for a, b in relrels:
                 if b in state:
                     q = state[b]
                     state[a] = (
                         qtn.common_scalar(state[a], q) if a in state else int(q)
                     )
-                elif it == 4:
+                elif it == REL_PASSES - 1:
                     # calculate.rs:829-834: missing parent on the last pass
                     # contributes cell 0
                     state[a] = 0 if a not in state else qtn.common_scalar(state[a], 0)

@@ -814,20 +814,6 @@ def _banded_pair_join(banded: DataFrame) -> DataFrame:
     )
 
 
-def simhash_band_candidates(
-    sigs: DataFrame,
-    max_hamming: int = 3,
-    id_col: str = "doc_id",
-    m_blocks: int | None = None,
-) -> DataFrame:
-    """Candidate pairs (a < b) whose signatures agree on at least one
-    band key (see _simhash_banded for the (m_blocks, max_hamming)
-    pigeonhole construction and its completeness argument).  One explode +
-    one equi-join on (key_idx, key_val) — no cross product anywhere."""
-    banded = _simhash_banded(sigs, max_hamming, id_col, m_blocks)
-    return _banded_pair_join(banded).select("a", "b").distinct()
-
-
 def simhash_neardup_pairs(
     sigs: DataFrame,
     max_hamming: int = 3,

@@ -9,7 +9,7 @@
   pruning when `qt`/tile is the partition column)
 - id-closure semi-join (filter_elements.rs:298-376): nodes in region ->
   ways touching any such node -> all nodes of those ways (exnodes) ->
-  relations with any member in set -> rel->rel, 5 fixed iterations
+  relations with any member in set -> rel->rel, REL_PASSES fixed passes
 """
 
 from __future__ import annotations
@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType
 
 from ..functions import qt_numpy as qtn
+from . import calcqts as C
 
 
 # ---------------------------------------------------------------------------
@@ -131,10 +132,11 @@ def make_pip_udf(poly: Poly):
 
 def classify_tiles(tile_cells: np.ndarray, bbox, poly: Poly | None = None):
     """Split tile cells into (interior, boundary) sets; disjoint tiles are
-    dropped.  Tile extent = cell bbox with the reference's 0.05 buffer
-    (filelist.rs:84,180)."""
+    dropped.  Tile extent = the cell with the reference's 0.05 buffer
+    (filelist.rs:84,180), buffered in Mercator space as cell assignment
+    buffers, so every row routed to a tile lies inside its extent."""
     cells = np.asarray(tile_cells, dtype=np.int64)
-    tminlon, tminlat, tmaxlon, tmaxlat = qtn.as_bbox(cells, 0.05)
+    tminlon, tminlat, tmaxlon, tmaxlat = qtn.assignment_bbox(cells)
     a, b, c, d = bbox
     contained = (
         (a <= tminlon) & (b <= tminlat) & (tmaxlon <= c) & (tmaxlat <= d)
@@ -194,46 +196,18 @@ def id_closure(
     """Recursive reference closure of a spatial filter.
 
     Returns dict of DataFrames of ids: nodes (in-region), exnodes (way
-    completions), ways, relations.  All steps are semi-joins; the rel->rel
-    step iterates exactly 5 times (filter_elements.rs:366-370).
+    completions), ways, relations.  All steps are semi-joins over the
+    edge lists of operators.calcqts; the rel->rel step runs exactly
+    calcqts.REL_PASSES passes (filter_elements.rs:366-370).
     """
     in_region = filter_points(nodes, bbox, poly).select("id")
-    edges = ways.select(F.col("id").alias("way_id"), F.explode("refs").alias("node_id"))
-    sel_ways = (
-        edges.join(in_region.withColumnRenamed("id", "node_id"), "node_id", "left_semi")
-        .select(F.col("way_id").alias("id"))
-        .distinct()
-    )
-    exnodes = (
-        edges.join(sel_ways.withColumnRenamed("id", "way_id"), "way_id", "left_semi")
-        .select(F.col("node_id").alias("id"))
-        .distinct()
-        .join(in_region, "id", "left_anti")
-    )
+    sel_ways = C.ways_touching(ways, in_region)
+    exnodes = C.nodes_of_ways(ways, sel_ways).join(in_region, "id", "left_anti")
     all_nodes = in_region.unionByName(exnodes)
-
-    mems = relations.select(
-        F.col("id").alias("rel_id"),
-        F.explode("members").alias("m"),
-    ).select("rel_id", F.col("m.mem_type").alias("mem_type"), F.col("m.mem_ref").alias("mem_ref"))
-    hit_n = mems.filter(F.col("mem_type") == 0).join(
-        all_nodes.withColumnRenamed("id", "mem_ref"), "mem_ref", "left_semi"
+    seed = C.rels_with_members(relations, all_nodes, 0).unionByName(
+        C.rels_with_members(relations, sel_ways, 1)
     )
-    hit_w = mems.filter(F.col("mem_type") == 1).join(
-        sel_ways.withColumnRenamed("id", "mem_ref"), "mem_ref", "left_semi"
-    )
-    sel_rels = hit_n.unionByName(hit_w).select(F.col("rel_id").alias("id")).distinct()
-
-    rel_edges = mems.filter(F.col("mem_type") == 2).select("rel_id", "mem_ref")
-    for _ in range(5):
-        newly = (
-            rel_edges.join(
-                sel_rels.withColumnRenamed("id", "mem_ref"), "mem_ref", "left_semi"
-            )
-            .select(F.col("rel_id").alias("id"))
-            .distinct()
-        )
-        sel_rels = sel_rels.unionByName(newly).distinct()
+    sel_rels = C.rel_ancestors(relations, seed)
 
     return {
         "nodes": in_region,

@@ -39,20 +39,9 @@ def extract(
         bbox_from_str(filter_spec) if isinstance(filter_spec, str) else tuple(filter_spec)
     )
 
-    nodes = (
-        M.merge_changes(nodes_snapshots[0], list(nodes_snapshots[1:]))
-        if len(nodes_snapshots) > 1
-        else nodes_snapshots[0]
-    )
-    ways = (
-        M.merge_changes(ways_snapshots[0], list(ways_snapshots[1:]))
-        if len(ways_snapshots) > 1
-        else ways_snapshots[0]
-    )
-    rels = (
-        M.merge_changes(rels_snapshots[0], list(rels_snapshots[1:]))
-        if len(rels_snapshots) > 1
-        else rels_snapshots[0]
+    nodes, ways, rels = (
+        M.merge_changes(snaps[0], snaps[1:]) if len(snaps) > 1 else snaps[0]
+        for snaps in (nodes_snapshots, ways_snapshots, rels_snapshots)
     )
 
     ids = FL.id_closure(nodes, ways, rels, bbox, poly)

@@ -25,34 +25,15 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators import calcqts as C
+from ..operators import merge as M
 from ..operators.merge import CREATE, DELETE, MODIFY, NORMAL, REMOVE, UNCHANGED
 
 
 def touched_way_ids(ways: DataFrame, changed_node_ids: DataFrame) -> DataFrame:
     """Ways containing any changed node (index semi-join,
     find_update.rs:22-137)."""
-    edges = ways.select(F.col("id").alias("way_id"), F.explode("refs").alias("node_id"))
-    return (
-        edges.join(
-            changed_node_ids.withColumnRenamed("id", "node_id"), "node_id", "left_semi"
-        )
-        .select(F.col("way_id").alias("id"))
-        .distinct()
-    )
-
-
-def touched_rel_ids(
-    relations: DataFrame, changed_ids: DataFrame, mem_type: int
-) -> DataFrame:
-    mems = relations.select(
-        F.col("id").alias("rel_id"), F.explode("members").alias("m")
-    ).select("rel_id", F.col("m.mem_type").alias("t"), F.col("m.mem_ref").alias("r"))
-    return (
-        mems.filter(F.col("t") == mem_type)
-        .join(changed_ids.withColumnRenamed("id", "r"), "r", "left_semi")
-        .select(F.col("rel_id").alias("id"))
-        .distinct()
-    )
+    return C.ways_touching(ways, changed_node_ids)
 
 
 def update_decision_table(
@@ -149,10 +130,8 @@ def run_update(
     touched ids, recompute their cells, emit the decision-table delta.
 
     Returns (delta DataFrame, merged nodes, merged ways).  Relations
-    follow the same pattern via touched_rel_ids + operators.calcqts.rel_qts.
+    follow the same pattern in run_update_relations.
     """
-    from ..operators import calcqts as C
-    from ..operators import merge as M
     from ..plans.pipeline import make_route_udf
 
     spark = nodes.sparkSession
@@ -165,7 +144,7 @@ def run_update(
     ).distinct()
     sub_ways = merged_ways.join(t_ways, "id", "left_semi")
     # nodes needed: changed + all refs of touched ways
-    ref_nodes = sub_ways.select(F.explode("refs").alias("id")).distinct()
+    ref_nodes = C.nodes_of_ways(merged_ways, t_ways)
     t_nodes = changed_nodes.unionByName(ref_nodes).distinct()
     sub_nodes = merged_nodes.join(t_nodes, "id", "left_semi")
 
@@ -196,7 +175,7 @@ def run_update(
         stored.filter(F.col("etype") == 1).select(
             "id", F.col("qt").alias("qt_old"), "alloc"
         ),
-        wq.withColumnRenamed("id", "id"),
+        wq,
         route,
     ).withColumn("etype", F.lit(1))
     return node_delta.unionByName(way_delta), merged_nodes, merged_ways
@@ -214,24 +193,20 @@ def run_update_relations(
 ) -> DataFrame:
     """Relation leg of the micro-update: harvest relations touched by
     changed members or changed themselves, recompute their cells (LCA +
-    5-pass rel->rel, operators.calcqts.rel_qts), emit the decision table."""
-    from ..operators import calcqts as C
-    from ..operators import merge as M
+    REL_PASSES-pass rel->rel, operators.calcqts.rel_qts), emit the decision
+    table."""
     from ..plans.pipeline import make_route_udf
 
     merged = M.apply_changes(
         relations.withColumn("changetype", F.lit(0)), change_rels
     )
-    touched = (
-        touched_rel_ids(merged, changed_node_ids, 0)
-        .unionByName(touched_rel_ids(merged, changed_way_ids, 1))
-        .unionByName(change_rels.select("id"))
-        .distinct()
-    )
     # rel->rel propagation can touch ancestors of touched rels
-    for _ in range(5):
-        parents = touched_rel_ids(merged, touched, 2)
-        touched = touched.unionByName(parents).distinct()
+    touched = C.rel_ancestors(
+        merged,
+        C.rels_with_members(merged, changed_node_ids, 0)
+        .unionByName(C.rels_with_members(merged, changed_way_ids, 1))
+        .unionByName(change_rels.select("id")),
+    )
     sub = merged.join(touched, "id", "left_semi")
     rq = C.rel_qts(sub, node_qts, way_qts)
 

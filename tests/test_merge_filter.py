@@ -131,6 +131,58 @@ def test_id_closure(spark):
     assert sorted(r.id for r in res["relations"].collect()) == [201, 202, 204, 205]
 
 
+def test_id_closure_rel_chain_stops_after_five_passes(spark, rel_chain):
+    # node 1 is in the box; relation 300+k is k rel->rel hops from 300
+    nodes = spark.createDataFrame(
+        [(1, 0, 0), (2, 500000000, 0)], "id long, lon long, lat long"
+    )
+    ways = spark.createDataFrame([], "id long, refs array<long>")
+    res = FL.id_closure(nodes, ways, rel_chain, (-1, -1, 1, 1))
+    assert sorted(r.id for r in res["relations"].collect()) == [
+        300, 301, 302, 303, 304, 305
+    ]
+
+
+def test_classify_tiles_keeps_the_tile_of_every_routed_footprint():
+    """A box meeting a footprint must keep every tile the footprint can be
+    routed to (any ancestor of its cell).  Cell assignment buffers in
+    Mercator y, so a degree-buffered extent misses footprints on the
+    equator side of a cell."""
+    from osmquadtree_rust_spark.functions import qt_numpy as Q
+
+    named = [
+        # crosses the equator, lands in depth-1 cell A
+        ((-129563052, -76204429, 75236948, 77395571), "A"),
+        # beyond the Mercator edge, lands in the root
+        ((100000000, 860000000, 120000000, 895000000), ""),
+    ]
+    for fp, path in named:
+        qt = int(Q.calculate(*(np.array([v]) for v in fp))[0])
+        assert Q.as_string(qt) == path
+        for x in (fp[0], fp[2]):
+            for y in (fp[1], fp[3]):
+                interior, boundary = FL.classify_tiles(np.array([qt]), (x, y, x, y))
+                assert qt in set(interior) | set(boundary), (fp, x, y)
+
+    rng = np.random.default_rng(20261018)
+    n = 20000
+    lon = rng.integers(-1800000000, 1800000000, n)
+    lat = rng.integers(-900000000, 900000000, n)
+    hx = (10 ** rng.uniform(1, 9, n)).astype(np.int64)
+    hy = (10 ** rng.uniform(1, 9, n)).astype(np.int64)
+    mn = np.maximum(lon - hx, -1800000000)
+    mt = np.maximum(lat - hy, -900000000)
+    Mn = np.minimum(lon + hx, 1800000000)
+    Mt = np.minimum(lat + hy, 900000000)
+    qt = Q.calculate(mn, mt, Mn, Mt)
+    d = Q.depth(qt)
+    for level in range(int(d.max()) + 1):
+        m = d >= level
+        a, b, c, e = Q.assignment_bbox(Q.qt_round(qt[m], level))
+        inside = (a <= mn[m]) & (b <= mt[m]) & (Mn[m] <= c) & (Mt[m] <= e)
+        assert inside.all(), (level, int((~inside).sum()))
+
+
 # ---------------------------------------------------------------------------
 # property tests: window-dedup merge == sequential sorted-merge oracle
 # ---------------------------------------------------------------------------

@@ -231,3 +231,49 @@ def test_round4_ops_no_quadratic_or_single_partition(spark):
     # the only NLJ allowed anywhere is the <=9-row offsets broadcast
     for name in ("cooc", "top_frac", "hh", "annj"):
         assert "BroadcastNestedLoopJoin" not in plans[name], name
+
+
+def test_rel_closure_plans_grow_linearly_in_passes(spark, rel_chain, monkeypatch):
+    """A closure loop written x = x ∪ parents(x) doubles its plan every
+    rel->rel pass; seed ∪ parents(previous) adds the same joins each pass.
+    Pinned on the optimized plans of the extract closure and of the
+    relation update leg."""
+    from osmquadtree_rust_spark.functions import qt_numpy as Q
+    from osmquadtree_rust_spark.operators import calcqts as C
+    from osmquadtree_rust_spark.operators import filter as FL
+    from osmquadtree_rust_spark.streaming import updates as U
+
+    nodes = spark.createDataFrame([(1, 0, 0)], "id long, lon long, lat long")
+    ways = spark.createDataFrame([], "id long, refs array<long>")
+    ids = spark.createDataFrame([(1,)], "id long")
+    qt = int(Q.calculate_point(np.array([0]), np.array([0]))[0])
+    qts = spark.createDataFrame([(1, qt)], "id long, qt long")
+    no_qts = spark.createDataFrame([], "id long, qt long")
+    none = spark.createDataFrame([], "id long")
+    change_rels = spark.createDataFrame(
+        [], "id long, members array<struct<mem_type:int, mem_ref:long>>, changetype int"
+    )
+    stored = spark.createDataFrame([], "etype int, id long, qt long, alloc long")
+    cells = np.array([0], dtype=np.int64)
+    builds = {
+        "id_closure": lambda: FL.id_closure(nodes, ways, rel_chain, (-1, -1, 1, 1))[
+            "relations"
+        ],
+        "run_update_relations": lambda: U.run_update_relations(
+            rel_chain, change_rels, qts, no_qts, ids, none, stored, cells
+        ),
+    }
+
+    def joins(df) -> int:
+        return df._jdf.queryExecution().optimizedPlan().toString().count("Join ")
+
+    passes = (1, 2, C.REL_PASSES)
+    for name, build in builds.items():
+        counts = {}
+        for n in passes:
+            monkeypatch.setattr(C, "REL_PASSES", n)
+            counts[n] = joins(build())
+        step = counts[2] - counts[1]
+        assert 0 < step and all(
+            counts[n] == counts[1] + (n - 1) * step for n in passes
+        ), (name, counts)

@@ -160,3 +160,37 @@ def test_update_relations_leg(spark):
     assert (301, REMOVE) in rows and rows[(301, REMOVE)] == (a, 0)
     assert (302, UNCHANGED) in rows and rows[(302, UNCHANGED)][0] == b
     assert (302, REMOVE) in rows and rows[(302, REMOVE)] == (a, 0)
+
+
+def test_update_relations_rel_chain_stops_after_five_passes(spark, rel_chain):
+    # node 1 (member of 300) moves A -> B; relation 300+k is k rel->rel
+    # hops from 300, so 300..305 are harvested and move, 306/307 are not
+    group_cells = np.array(
+        sorted([O.from_string("A"), O.from_string("B")]), dtype=np.int64
+    )
+    a, b = O.from_string("A"), O.from_string("B")
+    change_rels = spark.createDataFrame(
+        [],
+        "id long, members array<struct<mem_type:int, mem_ref:long>>, changetype int",
+    )
+    nq_new = int(Q.calculate_point(np.array([900000000]), np.array([400000000]))[0])
+    qa = int(Q.calculate_point(np.array([-900000000]), np.array([400000000]))[0])
+    stored = spark.createDataFrame(
+        [(2, 300 + k, qa, a) for k in range(8)], "etype int, id long, qt long, alloc long"
+    )
+    delta = U.run_update_relations(
+        rel_chain,
+        change_rels,
+        spark.createDataFrame([(1, nq_new)], "id long, qt long"),
+        spark.createDataFrame([], "id long, qt long"),
+        spark.createDataFrame([(1,)], "id long"),
+        spark.createDataFrame([], "id long"),
+        stored,
+        group_cells,
+    )
+    rows = {(r.id, r.changetype): (r.tile, r.qt) for r in delta.collect()}
+    moved = range(300, 306)
+    assert {rid for rid, _ in rows} == set(moved)
+    for rid in moved:
+        assert rows[(rid, UNCHANGED)][0] == b
+        assert rows[(rid, REMOVE)] == (a, 0)
